@@ -1,0 +1,5 @@
+"""Benchmark for cryo_spark: end-to-end and per-layer metrics.
+
+Run ``python3 perfbench/run.py --workload <name> --seed <n> --seconds <s>
+--trace <0|1>`` from the repository root. See perfbench/README.md.
+"""
